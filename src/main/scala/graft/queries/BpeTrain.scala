@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Distributed BPE tokenizer training (Sennrich et al. 2016,
   * arXiv:1508.07909) — the merge-discovery loop every LLM tokenizer
@@ -132,21 +133,22 @@ object BpeTrain {
     // curation pipeline.
     val base = vocab(docs).persist()
     base.count() // materialize once; rounds chain scan-local transforms
+    // One-row argmax over the CACHED vocab (vocabulary-bounded at any
+    // corpus scale): AQE's per-stage job materialization only adds a
+    // driver round-trip per round — and the rounds are sequential by
+    // definition, so round-trips are the whole cost. The argmax runs on
+    // the store's private metadata session (AQE off, shared cache), so
+    // the caller's session is never reconfigured; the corpus-sized vocab
+    // aggregation above (base.count()) stays on the caller's session.
+    lazy val meta = graft.store.ManifestTable.metadataSession(s)
     try {
       var v: DataFrame = base
       val merges = Seq.newBuilder[(Long, String, String, String, Long)]
       for (rank <- 1 to rounds) {
-        // One-row argmax over the CACHED vocab (vocabulary-bounded at any
-        // corpus scale): AQE's per-stage job materialization only adds a
-        // driver round-trip per round — and the rounds are sequential by
-        // definition, so round-trips are the whole cost. Scoped off with
-        // the store's depth-counted scope; the corpus-sized vocab
-        // aggregation above (base.count()) deliberately keeps AQE.
-        val top = graft.store.ManifestTable.aqeScopeOff(s) {
+        val top = GraftBridge.ofRows(meta, GraftBridge.logicalPlan(
           pairCounts(v)
             .orderBy(col("cnt").desc, col("l"), col("r"))
-            .limit(1).collect()
-        }
+            .limit(1))).collect()
         if (top.nonEmpty) {
           val (l, r, cnt) =
             (top(0).getString(0), top(0).getString(1), top(0).getLong(2))

@@ -50,27 +50,32 @@ object PipelineQueries {
     * Spark job just to build the query object, which breaks lazy
     * construction for every explain/plan-capture caller. The same number
     * a manifest-backed table serves from its stats — here the footer IS
-    * the manifest. Memoized per path: the bench corpora are immutable by
-    * contract (deterministic inputs, read-only mount). */
+    * the manifest. The listing runs on every call; each leaf file's
+    * footer count is memoized on (path, length, mtime), so a file
+    * rewritten in place is re-read rather than served stale (the count
+    * backs the p_dedup_embed O(n²) guard and the PageRank broadcast
+    * gate). */
   private val parquetCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
 
-  private[graft] def parquetRowCount(s: SparkSession, path: String): Long =
-    parquetCountMemo.computeIfAbsent(path, _ => {
-      val conf = s.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(conf)
-      def leafFiles(st: org.apache.hadoop.fs.FileStatus)
-          : Seq[org.apache.hadoop.fs.FileStatus] =
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-        else Seq.empty
-      leafFiles(fs.getFileStatus(root)).map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-    })
+  private[graft] def parquetRowCount(s: SparkSession, path: String): Long = {
+    val conf = s.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    def leafFiles(st: org.apache.hadoop.fs.FileStatus)
+        : Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Seq.empty
+    leafFiles(fs.getFileStatus(root)).map { f =>
+      parquetCountMemo.computeIfAbsent(
+        (f.getPath.toString, f.getLen, f.getModificationTime), _ => {
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try r.getRecordCount finally r.close()
+        }).longValue
+    }.sum
+  }
 
   // ---------------------------------------------------------------- hashing
 

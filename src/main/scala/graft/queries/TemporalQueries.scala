@@ -120,6 +120,15 @@ object TemporalQueries {
     }
   }
 
+  /** A session of its own for the streaming gate queries, narrowed once
+    * to 8 shuffle partitions: their stores, inputs and streams handle a
+    * few hundred keys, and the caller's session is never reconfigured. */
+  private def gateSession(s: SparkSession): SparkSession = {
+    val gs = s.newSession()
+    gs.conf.set("spark.sql.shuffle.partitions", "8")
+    gs
+  }
+
   def mutations(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir).select(
       col("event_type").as("tablet_id"),
@@ -284,40 +293,34 @@ object TemporalQueries {
            |) ORDER BY change_height, primary_key""".stripMargin
       }) { (s, dir) =>
       import org.apache.spark.sql.types._
+      // Inputs, store and stream run on a gate session of their own (see
+      // [[gateSession]]): the caller's 32 shuffle partitions would mean
+      // 32 state-store instances per micro-batch for a few hundred keys —
+      // pure per-partition overhead ×4 batches.
+      val gs = gateSession(s)
       val root = java.nio.file.Files.createTempDirectory("graft-cf-gate").toString
-      val store = new graft.store.StateStore(root, graft.store.StateStore.ManifestCommit)(s)
-      val m = mutations(s, dir).filter(col("tablet_id") === "error")
+      val store = new graft.store.StateStore(root, graft.store.StateStore.ManifestCommit)(gs)
+      val m = mutations(gs, dir).filter(col("tablet_id") === "error")
       val sink = "cf_gate_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      // State-store width for THIS streaming query only: the session's 32
-      // shuffle partitions mean 32 state-store instances per micro-batch
-      // for a few hundred keys — pure per-partition overhead ×4 batches.
-      // The stream's execution thread reads the conf when it PLANS the
-      // first micro-batch (after start() returns), so the narrowing must
-      // stay in force until the final drain — restore only after q.stop()
-      // (gate queries run sequentially, so the scoped set is safe).
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+      val q = store.changefeedDiffStream().writeStream.format("memory")
+        .queryName(sink)
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft-cf-gate-ck").toString)
+        .outputMode("append").start()
       try {
-        val q = store.changefeedDiffStream().writeStream.format("memory")
-          .queryName(sink)
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("graft-cf-gate-ck").toString)
-          .outputMode("append").start()
-        try {
-          CdcBounds.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
-            store.writeTabletRows(
-              m.filter(col("height") > lo && col("height") <= hi)
-                .select(lit(1).as("collection"), col("tablet_id"), col("height"),
-                  col("primary_key"), col("value").cast("binary").as("value"),
-                  col("is_deletion")),
-              commitId = s"w$i")
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        CdcBounds.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
+          store.writeTabletRows(
+            m.filter(col("height") > lo && col("height") <= hi)
+              .select(lit(1).as("collection"), col("tablet_id"), col("height"),
+                col("primary_key"), col("value").cast("binary").as("value"),
+                col("is_deletion")),
+            commitId = s"w$i")
+          q.processAllAvailable()
+        }
+      } finally q.stop()
       // The memory sink's rows, frozen into a plain local relation (the
       // sink's temp view dies with the query name's scope).
-      val rows = s.table(sink)
+      val rows = gs.table(sink)
         .select(col("primary_key"), col("change_type"), col("change_height"),
           col("old_value").cast("string").as("old_value"),
           col("new_value").cast("string").as("new_value"))
@@ -337,11 +340,13 @@ object TemporalQueries {
     // (no argmax — state already collapsed by merge) must equal the plain
     // last-write-wins as-of oracle. Stream → merge → serve ≡ readTabletAt.
     QuerySpec.sql("t_materialized_state", lwwOracle("view", 6000)) { (s, dir) =>
-      implicit val is = s
+      // Store, inputs and stream on the gate session: the materializer's
+      // merge runs inside foreachBatch and reads that session's width.
+      val gs = gateSession(s)
       val root = java.nio.file.Files.createTempDirectory("graft-mat-gate").toString
       val target = java.nio.file.Files.createTempDirectory("graft-mat-target").toString
-      val store = new graft.store.StateStore(root, graft.store.StateStore.ManifestCommit)(s)
-      val m = mutations(s, dir).filter(col("tablet_id") === "view")
+      val store = new graft.store.StateStore(root, graft.store.StateStore.ManifestCommit)(gs)
+      val m = mutations(gs, dir).filter(col("tablet_id") === "view")
       Seq((-1L, 2000L), (2000L, 4000L), (4000L, 6000L)).zipWithIndex.foreach {
         case ((lo, hi), i) =>
           store.writeTabletRows(
@@ -351,19 +356,10 @@ object TemporalQueries {
                 col("is_deletion")),
             commitId = s"w$i")
       }
-      // Narrow the shuffle width for the whole stream lifetime: unlike
-      // the stateful CDC query (width baked into the checkpoint at
-      // start), the materializer's merge runs inside foreachBatch and
-      // reads the session conf at BATCH time, so the restore must wait
-      // for the final drain. Gate queries run sequentially.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = graft.streaming.StateMaterializer.start(store, target,
-          java.nio.file.Files.createTempDirectory("graft-mat-ck").toString)
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      graft.streaming.StateMaterializer.read(target)
+      val q = graft.streaming.StateMaterializer.start(store, target,
+        java.nio.file.Files.createTempDirectory("graft-mat-ck").toString)
+      try q.processAllAvailable() finally q.stop()
+      graft.streaming.StateMaterializer.read(target)(s)
         .filter(col("tablet_id") === "view")
         .select(col("primary_key"), col("height"),
           col("value").cast("string").as("value"))
@@ -403,64 +399,60 @@ object TemporalQueries {
          |  ON s.primary_key = f.primary_key AND s.w = f.fw
          |WHERE s.rn = 1
          |ORDER BY s.primary_key""".stripMargin) { (s, dir) =>
-      implicit val is = s
       import org.apache.spark.sql.types._
+      implicit val gs: SparkSession = gateSession(s)
       val target = java.nio.file.Files.createTempDirectory("graft-ef-target").toString
-      val m = mutations(s, dir).filter(col("tablet_id") === "view")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        // One merge generation per window, applied SYNCHRONOUSLY — the
-        // same per-batch winners→merge the materializer's foreachBatch
-        // performs (StateMaterializer.start), without paying three
-        // streaming micro-batch drains of fixed overhead for it. The
-        // store→materializer streaming path is its own gate
-        // (t_materialized_state + StateMaterializerSpec); THIS gate's
-        // subject is the emitFresh changefeed riding the resulting
-        // append + rewrite generations, and that drain stays streaming
-        // below.
-        val t = graft.streaming.StateMaterializer.targetTable(target)
-        val keyCols = graft.streaming.StateMaterializer.KeyCols
-        Seq((-1L, 2000L), (2000L, 4000L), (4000L, 6000L)).zipWithIndex.foreach {
-          case ((lo, hi), i) =>
-            val windowRows = m.filter(col("height") > lo && col("height") <= hi)
-              .select(lit(1).as("collection"), col("tablet_id"), col("height"),
-                col("primary_key"), col("value").cast("binary").as("value"),
-                col("is_deletion"))
-            val winners = graft.read.TemporalReads
-              .latestPerKey(windowRows, keyCols, Seq("value", "collection"))
-              .select(graft.model.Schemas.tabletRows.fieldNames.map(col).toSeq: _*)
-            t.merge(winners, keyCols, orderCol = "height",
-              deleteCol = "is_deletion", commitId = s"w$i",
-              keepTombstones = true)
-        }
-        // Contents-preserving rewrite mid-history: emitFresh must ride
-        // through it with nothing emitted (fresh recorded as known-none).
-        graft.streaming.StateMaterializer.compact(target, numFiles = 4)
-        val sink = "ef_gate_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q2 = graft.streaming.ManifestChangefeed
-          .stream(s, target, onRewrite = "emitFresh")
-          .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("graft-ef-ck2").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        // Generous bound: the drain is 4 tiny micro-batches, but the gate
-        // may share the host with unrelated load (a 120 s bound tripped
-        // once under a concurrent 32-core probe run).
-        require(q2.awaitTermination(300000L),
-          s"emitFresh drain must terminate; status=${q2.status}")
-        q2.stop()
-        val rows = s.table(sink)
-          .select(col("primary_key"), col("height"),
-            col("value").cast("string").as("value"), col("is_deletion"))
-          .collect()
-        val schema = StructType(Seq(
-          StructField("primary_key", StringType), StructField("height", LongType),
-          StructField("value", StringType), StructField("is_deletion", BooleanType)))
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-          .orderBy("primary_key")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val m = mutations(gs, dir).filter(col("tablet_id") === "view")
+      // One merge generation per window, applied SYNCHRONOUSLY — the
+      // same per-batch winners→merge the materializer's foreachBatch
+      // performs (StateMaterializer.start), without paying three
+      // streaming micro-batch drains of fixed overhead for it. The
+      // store→materializer streaming path is its own gate
+      // (t_materialized_state + StateMaterializerSpec); THIS gate's
+      // subject is the emitFresh changefeed riding the resulting
+      // append + rewrite generations, and that drain stays streaming
+      // below.
+      val t = graft.streaming.StateMaterializer.targetTable(target)
+      val keyCols = graft.streaming.StateMaterializer.KeyCols
+      Seq((-1L, 2000L), (2000L, 4000L), (4000L, 6000L)).zipWithIndex.foreach {
+        case ((lo, hi), i) =>
+          val windowRows = m.filter(col("height") > lo && col("height") <= hi)
+            .select(lit(1).as("collection"), col("tablet_id"), col("height"),
+              col("primary_key"), col("value").cast("binary").as("value"),
+              col("is_deletion"))
+          val winners = graft.read.TemporalReads
+            .latestPerKey(windowRows, keyCols, Seq("value", "collection"))
+            .select(graft.model.Schemas.tabletRows.fieldNames.map(col).toSeq: _*)
+          t.merge(winners, keyCols, orderCol = "height",
+            deleteCol = "is_deletion", commitId = s"w$i",
+            keepTombstones = true)
+      }
+      // Contents-preserving rewrite mid-history: emitFresh must ride
+      // through it with nothing emitted (fresh recorded as known-none).
+      graft.streaming.StateMaterializer.compact(target, numFiles = 4)
+      val sink = "ef_gate_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q2 = graft.streaming.ManifestChangefeed
+        .stream(gs, target, onRewrite = "emitFresh")
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft-ef-ck2").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      // Generous bound: the drain is 4 tiny micro-batches, but the gate
+      // may share the host with unrelated load (a 120 s bound tripped
+      // once under a concurrent 32-core probe run).
+      require(q2.awaitTermination(300000L),
+        s"emitFresh drain must terminate; status=${q2.status}")
+      q2.stop()
+      val rows = gs.table(sink)
+        .select(col("primary_key"), col("height"),
+          col("value").cast("string").as("value"), col("is_deletion"))
+        .collect()
+      val schema = StructType(Seq(
+        StructField("primary_key", StringType), StructField("height", LongType),
+        StructField("value", StringType), StructField("is_deletion", BooleanType)))
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .orderBy("primary_key")
     },
 
     // Speculative overlay (J2): durable ≤ 7000 overlaid by a speculative set

@@ -3,6 +3,7 @@ package graft.store
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 /** Object-store-safe commit protocol for one table (the manifest-pointer
   * alternative to [[StateStore]]'s staged-rename protocol — reference
@@ -289,8 +290,10 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     * whose "rename" STREAMS bytes into place (NFS-class mounts, naive
     * shims) can expose a partially-written pointer for a moment — found
     * by the object-store spec's async changefeed poll racing a pointer
-    * swap. A transient torn read retries briefly; persistent garbage
-    * still fails loudly instead of reading as an empty table. */
+    * swap, or by a poll reading a checksummed local pointer between the
+    * renames of the data file and its `.crc`. A transient torn read
+    * retries briefly; persistent garbage or a persistent checksum
+    * mismatch still fails loudly instead of reading as an empty table. */
   def currentGeneration(): Option[Long] = pointerFrame().map(_._1)
 
   /** THE pointer read: (generation, owner) with bounded torn-read retry —
@@ -322,9 +325,15 @@ final class ManifestTable(val tablePath: String, schema: StructType,
           attempt += 1
           Thread.sleep(10L << attempt)
         case Some(in) =>
+          // A checksum mismatch is a torn read too: a checksummed local FS
+          // renames the pointer and its `.crc` sidecar separately, so a
+          // read between the two checks new bytes against the old sum.
+          // Read as empty text, it takes the bounded retry below; still
+          // mismatched on the last attempt, it propagates.
           val text =
             try new String(
               org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
+            catch { case _: org.apache.hadoop.fs.ChecksumException if attempt < 3 => "" }
             finally in.close()
           // SELF-VALIDATING frame: `g2:<n>:<n>;` — the terminator proves
           // the read saw the whole object and the doubled value proves it
@@ -1668,7 +1677,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
           val files = sized.map(_._1)
           if (failBeforePublish)
             throw new IllegalStateException(s"injected crash before publish of $commitId")
-          val e = ManifestEntry(commitId, files, collectStats(dataDir, files),
+          val e = ManifestEntry(commitId, files, footerStats(files),
             sized.map(_._2))
           staged = Some((next, e))
           e
@@ -1792,7 +1801,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     val files = sized.map(_._1)
     if (failBeforePublish)
       throw new IllegalStateException(s"injected crash before publish of $commitId")
-    val entry = ManifestEntry(commitId, files, collectStats(dataDir, files),
+    val entry = ManifestEntry(commitId, files, footerStats(files),
       sized.map(_._2))
     beforeOwnHook()
     // A replaceAll is contents-preserving by contract (compaction), so
@@ -1897,7 +1906,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
             if (failBeforePublish) throw new IllegalStateException(
               s"injected crash before publish of $commitId")
             val entry = ManifestEntry(commitId, files,
-              collectStats(dataDir, files), sized.map(_._2))
+              footerStats(files), sized.map(_._2))
             // RE-VERIFY ownership (by NONCE) before touching shared
             // metadata: a derivation that outlived the publish lease may
             // have had its reservation taken over (and the generation
@@ -1979,70 +1988,64 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Run `body` with adaptive query execution scoped OFF — for the
-    * protocol's METADATA-SIZED statements only (an aggregate collapsing to
-    * one row per file / a single count / a micro-batch-bounded key
-    * collect), where AQE has nothing to re-plan and its per-stage job
-    * materialization only adds driver round-trips — the dominant cost of
-    * a small commit. AQE is a pure optimization for any concurrent
-    * planner that happens to land inside the window, so the scoping is
-    * semantically safe — but the set/restore pair itself must be
-    * DEPTH-COUNTED per session ([[ManifestTable.aqeScopeOff]]): two
-    * overlapping naive scopes would capture each other's "false" as the
-    * previous value and leave AQE disabled for the session's lifetime
-    * (ingestion runs maintenance threads beside commits). NEVER use this
-    * around the data-sized derivation statements (winners argmax,
-    * rewrites) — those want AQE's coalescing and skew handling at
-    * scale. */
-  private def withAqeOff[T](body: => T): T =
-    ManifestTable.aqeScopeOff(spark)(body)
+  /** The private session the store's METADATA-SIZED statements run on:
+    * the touched-key collect and the fresh-side count and writes of a
+    * merge — statements whose input is the micro-batch-bounded update
+    * set, where AQE has nothing to re-plan and its per-stage job
+    * materialization only adds driver round-trips (the dominant cost of
+    * a small merge). A `newSession()` shares the SparkContext and the
+    * cache with the caller's session but owns its config, so the fixed
+    * AQE-off setting never leaks onto the caller's session: a concurrent
+    * query there plans exactly as its owner configured it. Created on
+    * first use, once per instance. Data-sized statements (the winners
+    * argmax, the rewrite side) stay on the caller's session and keep
+    * AQE's coalescing and skew handling. */
+  private lazy val metaSpark: SparkSession = ManifestTable.metadataSession(spark)
 
-  /** Per-file min/max of `statsCols` for a just-written commit directory —
-    * the manifest-side data-skipping index (the Delta/Iceberg per-file
-    * stats pattern). One extra column-pruned scan of the files this commit
-    * wrote (footer + statsCols pages only); a production writer folds this
-    * into the write task itself, which is exactly what Delta's commit
-    * protocol does — the stats' CONTENT and placement (inside the manifest,
-    * atomically published with the pointer swap) are the same either way.
-    * Empty when the instance declares no statsCols. */
-  private def collectStats(
-      dataDir: String,
-      files: Seq[String]): Seq[Map[String, (StatVal, StatVal)]] = {
-    if (statsCols.isEmpty || files.isEmpty)
-      return files.map(_ => Map.empty[String, (StatVal, StatVal)])
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val base = partitionCol match {
-      case Some(_) =>
-        spark.read.option("basePath", dataDir).schema(schema).parquet(dataDir)
-      case None => spark.read.schema(schema).parquet(dataDir)
-    }
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    // AQE scoped OFF for this one statement: its output is one row per
-    // file at ANY scale (the partial agg collapses everything map-side),
-    // so adaptive re-planning has nothing to optimize — it only splits
-    // the statement into one Spark job per stage, and the extra driver
-    // round-trip is the dominant cost of a small commit (measured: 3
-    // jobs per commit, 2 of them this read-back).
-    val rows = withAqeOff {
-      base
-        .groupBy(input_file_name().as("_file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-    }
-    val rootPrefix = fsOf(tablePath)._2.toUri.getPath
-    val byRel: Map[String, Map[String, (StatVal, StatVal)]] = rows.map { r =>
-      val rel = new Path(new java.net.URI(r.getAs[String]("_file")))
-        .toUri.getPath.stripPrefix(rootPrefix).stripPrefix("/")
-      val bounds = statsCols.flatMap { c =>
-        (Option(r.getAs[Any](s"min_$c")), Option(r.getAs[Any](s"max_$c"))) match {
-          case (Some(lo), Some(hi)) => Some(c -> (toStatVal(lo), toStatVal(hi)))
-          case _ => None // all-null column in this file: no bounds, never pruned on it
+  /** `df`'s analyzed plan re-wrapped on [[metaSpark]]. */
+  private def onMeta(df: DataFrame): DataFrame =
+    GraftBridge.ofRows(metaSpark, GraftBridge.logicalPlan(df))
+
+  /** Per-file min/max of `statsCols` for just-written files — the
+    * manifest-side data-skipping index (the Delta/Iceberg per-file stats
+    * pattern), folded on the DRIVER from the row-group statistics the
+    * parquet writer already put in each file's footer: one footer read
+    * per file, no Spark job. Long/int bounds are the footer's typed
+    * values; string bounds are its raw UTF-8 bytes, which parquet orders
+    * as unsigned bytes — the order [[StatVal]] compares in. A file gets
+    * no bounds for a column whose values are all null, or when some row
+    * group holding non-null values carries no min/max (parquet-mr omits
+    * binary bounds over 4 KiB): never pruned on it. Empty when the
+    * instance declares no statsCols. */
+  private def footerStats(files: Seq[String]): Seq[Map[String, (StatVal, StatVal)]] = {
+    if (statsCols.isEmpty) return files.map(_ => Map.empty[String, (StatVal, StatVal)])
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { rel =>
+      // Spark's own scan-side footer reader: a footer read only (opening a
+      // ParquetFileReader measured ~10 ms per file against ~0.7 ms).
+      val blocks = org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+        .readFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new Path(s"$tablePath/$rel"), conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.toSeq
+      statsCols.flatMap { c =>
+        val path = org.apache.parquet.hadoop.metadata.ColumnPath.get(c)
+        val chunks = blocks.flatMap(_.getColumns.asScala.find(_.getPath == path))
+        val bounded = chunks.filter(_.getStatistics.hasNonNullValue)
+        val unbounded = chunks.exists { ch =>
+          val st: org.apache.parquet.column.statistics.Statistics[_] = ch.getStatistics
+          !st.hasNonNullValue && (!st.isNumNullsSet || st.getNumNulls < ch.getValueCount)
+        }
+        if (bounded.isEmpty || unbounded) None
+        else {
+          val los = bounded.map(ch => toStatVal(ch.getStatistics.genericGetMin))
+          val his = bounded.map(ch => toStatVal(ch.getStatistics.genericGetMax))
+          Some(c -> (los.reduce((a, b) => if (cmp(a, b) <= 0) a else b),
+            his.reduce((a, b) => if (cmp(a, b) >= 0) a else b)))
         }
       }.toMap
-      rel -> bounds
-    }.toMap
-    files.map(f => byRel.getOrElse(f, Map.empty))
+    }
   }
 
   // ----------------------------------------------------------------- read
@@ -2246,12 +2249,12 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     // +1: a Long.MaxValue "disable the cap" override must not overflow
     // into limit(0) and silently drop the batch.
     val maxKeys = math.min(maxTouchedKeys, Int.MaxValue.toLong - 1)
-    val keyRows = withAqeOff {
-      // Micro-batch-bounded by the enforced contract below — AQE's
-      // per-stage jobs only add round-trips to a statement this small.
+    // Micro-batch-bounded by the enforced contract below, so it runs on
+    // the metadata session ([[metaSpark]]).
+    val keyRows = {
       import org.apache.spark.sql.functions.col
-      updates.select(keyCols.map(col): _*).distinct()
-        .limit((maxKeys + 1).toInt).collect()
+      onMeta(updates.select(keyCols.map(col): _*).distinct()
+        .limit((maxKeys + 1).toInt)).collect()
     }
     if (keyRows.length > maxKeys) throw new IllegalArgumentException(
       s"merge '$commitId' touches more than $maxKeys distinct keys — the " +
@@ -2610,14 +2613,12 @@ final class ManifestTable(val tablePath: String, schema: StructType,
         // no persist, no per-file dataChange to record (rewrite=false
         // means everything is fresh by definition). The statement's input
         // is the UPDATE BATCH alone — micro-batch-bounded by the enforced
-        // touched-keys contract — so AQE's per-stage job materialization
-        // is pure driver latency here (measured: 4 jobs → 1 for this one
-        // write); the single-range-partition write needs no sampling job.
-        withAqeOff {
-          writeData(merged.drop("__had")
-            .repartitionByRange(1, keyCols.map(col): _*)
-            .sortWithinPartitions(keyCols.map(col): _*), dataDir)
-        }
+        // touched-keys contract — so it runs on the metadata session
+        // (measured: 4 jobs → 1 for this one write under AQE-off); the
+        // single-range-partition write needs no sampling job.
+        writeData(onMeta(merged.drop("__had")
+          .repartitionByRange(1, keyCols.map(col): _*)
+          .sortWithinPartitions(keyCols.map(col): _*)), dataDir)
         (Seq.empty[String], listDataFilesSized(dataDir))
       } else {
         // TWO physical passes over the persisted winners: rewritten rows
@@ -2638,27 +2639,25 @@ final class ManifestTable(val tablePath: String, schema: StructType,
             .sortWithinPartitions(keyCols.map(col): _*), dataDir)
           val rw = listDataFiles(dataDir)
           val freshSide = m.where(col("__had") === 0).drop("__had")
-          // The whole fresh-insert side — count AND write — runs with AQE
-          // scoped off: fresh rows are a subset of the UPDATE BATCH
+          // The whole fresh-insert side — count AND write — runs on the
+          // metadata session: fresh rows are a subset of the UPDATE BATCH
           // (__had = 0 ⇒ the key existed in no matched file), so the side
           // is micro-batch-bounded by the enforced touched-keys contract
-          // at any table scale, and AQE's per-stage job materialization is
-          // pure driver latency on it (the count is one row; the write is
-          // a cached-scan + range shuffle whose partition count this code
+          // at any table scale (the count is one row; the write is a
+          // cached-scan + range shuffle whose partition count this code
           // sizes EXPLICITLY from the row count — nothing for AQE to
-          // coalesce). The rewrite side above deliberately KEEPS AQE: its
-          // volume is the matched files', not the batch's.
-          withAqeOff {
-            val freshCount = freshSide.count()
-            if (freshCount > 0L) {
-              val parts = math.max(1L,
-                (freshCount + freshRowsPerFile - 1L) / freshRowsPerFile)
-              val freshDf = freshSide
-                .repartitionByRange(parts.toInt, keyCols.map(col): _*)
-                .sortWithinPartitions(keyCols.map(col): _*)
-              val w = freshDf.write.mode(SaveMode.Append)
-              partitionCol.fold(w)(c => w.partitionBy(c)).parquet(dataDir)
-            }
+          // coalesce). The rewrite side above deliberately stays on the
+          // caller's session: its volume is the matched files', not the
+          // batch's.
+          val freshCount = onMeta(freshSide).count()
+          if (freshCount > 0L) {
+            val parts = math.max(1L,
+              (freshCount + freshRowsPerFile - 1L) / freshRowsPerFile)
+            val freshDf = onMeta(freshSide
+              .repartitionByRange(parts.toInt, keyCols.map(col): _*)
+              .sortWithinPartitions(keyCols.map(col): _*))
+            val w = freshDf.write.mode(SaveMode.Append)
+            partitionCol.fold(w)(c => w.partitionBy(c)).parquet(dataDir)
           }
           (rw, listDataFilesSized(dataDir))
         } finally m.unpersist(blocking = false)
@@ -2668,7 +2667,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     if (failBeforePublish)
       throw new IllegalStateException(s"injected crash before publish of $commitId")
     val mergedEntry = ManifestEntry(commitId, allFiles,
-      collectStats(dataDir, allFiles), allSized.map(_._2))
+      footerStats(allFiles), allSized.map(_._2))
     StagedMerge(head, headEntries.iterator.flatMap(_.files).toSet,
       next, matchedFiles, keyTuples, mergedEntry, freshFiles)
   }
@@ -2957,75 +2956,18 @@ object ManifestTable {
   final class ConcurrentPublishException(msg: String)
       extends RuntimeException(msg)
 
-  /** Depth-counted AQE-off scope, per session (see the instance-side
-    * [[ManifestTable.withAqeOff]] doc): the OUTERMOST scope captures the
-    * real previous value and only the OUTERMOST exit restores it, so
-    * overlapping scopes from concurrent store threads can never pin the
-    * session to AQE-off by restoring each other's "false". */
-  private final class AqeScopeState {
-    var depth = 0
-    var saved: String = "true"
-    var savedLimitParts: Option[String] = None
-    // Set when the last exit removed this entry from the map: a thread
-    // that raced computeIfAbsent against that removal must retry, or two
-    // live states for one session would each believe they are outermost
-    // (and one would capture the other's "false" as the previous value —
-    // the exact race the depth count exists to prevent).
-    var retired = false
-  }
-  private val aqeScopes =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, AqeScopeState]()
-
-  /** Live scope-state entries — exposed for the leak pin in
-    * ManifestStatsSpec (entries must not outlive their scopes: the map
-    * would otherwise strongly retain every session that ever entered a
-    * scope for the JVM lifetime). */
-  private[graft] def aqeScopeCount: Int = aqeScopes.size
-
-  private[graft] def aqeScopeOff[T](spark: SparkSession)(body: => T): T = {
-    var st: AqeScopeState = null
-    var entered = false
-    while (!entered) {
-      st = aqeScopes.computeIfAbsent(spark, _ => new AqeScopeState)
-      st.synchronized {
-        if (!st.retired) {
-          if (st.depth == 0) {
-            st.saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            // A scoped statement's take()/limit-collect must read ALL of
-            // its (metadata-sized) output in ONE job: the default
-            // initialNumPartitions=1 makes executeTake scan one partition,
-            // come back to the driver, and scale up 4× per round — the
-            // touched-keys collect measured 3 jobs for one statement. A
-            // concurrent query planned inside the window merely loses the
-            // incremental-take optimization (it reads all partitions of
-            // its final stage at once) — same perf-only posture as the
-            // AQE flag itself.
-            st.savedLimitParts =
-              spark.conf.getOption("spark.sql.limit.initialNumPartitions")
-            spark.conf.set("spark.sql.limit.initialNumPartitions", "1000000")
-          }
-          st.depth += 1
-          entered = true
-        }
-      }
-    }
-    try body
-    finally st.synchronized {
-      st.depth -= 1
-      if (st.depth == 0) {
-        spark.conf.set("spark.sql.adaptive.enabled", st.saved)
-        st.savedLimitParts match {
-          case Some(v) => spark.conf.set("spark.sql.limit.initialNumPartitions", v)
-          case None => spark.conf.unset("spark.sql.limit.initialNumPartitions")
-        }
-        // Drop the entry so the map never strongly retains a finished
-        // session (short-lived newSession() services): retire-then-remove
-        // under the same lock keeps the depth-count race-safe.
-        st.retired = true
-        aqeScopes.remove(spark, st)
-      }
-    }
+  /** A fresh session over `spark`'s SparkContext for metadata-sized
+    * statements, with fixed config: AQE off (nothing to re-plan at that
+    * size; its per-stage jobs are pure driver latency), and a
+    * take()/limit-collect reads ALL of its output in ONE job — the
+    * default initialNumPartitions=1 makes executeTake scan one
+    * partition, come back to the driver, and scale up 4× per round (the
+    * touched-key collect measured 3 jobs for one statement). */
+  private[graft] def metadataSession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.limit.initialNumPartitions", "1000000")
+    s
   }
 
   /** How long commit/merge/replaceAllRetrying keep retrying lost
@@ -3252,6 +3194,7 @@ object ManifestTable {
     case l: Long => LongVal(l)
     case i: Int => LongVal(i.toLong)
     case s: String => BytesVal(s.getBytes("UTF-8"))
+    case b: org.apache.parquet.io.api.Binary => BytesVal(b.getBytes)
     case other => sys.error(s"unsupported stats value ${other.getClass}")
   }
 

@@ -91,8 +91,7 @@ final class StateStore(
   // and again at the head of every [[rewriteTable]]. Readers never rename —
   // a reader racing a live rewrite between its two renames could otherwise
   // restore `path.old` over the writer's about-to-promote replacement.
-  Seq(tabletRowsPath, singletEntriesPath, checkpointsPath, snapshotsPath)
-    .foreach(recoverSwap)
+  Seq(tabletRowsPath, singletEntriesPath, snapshotsPath).foreach(recoverSwap)
 
   // ------------------------------------------------------------------
   // Filesystem plumbing (Hadoop FS — never java.io.File, which silently
@@ -175,13 +174,13 @@ final class StateStore(
     * [[recoverSwap]] (run at store construction and here — never by a
     * reader) finishes an interrupted swap. */
   private def rewriteTable(
-      path: String, replacement: DataFrame, format: String = "parquet",
+      path: String, replacement: DataFrame,
       partitionCols: Seq[String] = Nil): Unit = {
     recoverSwap(path)
     val tmp = s"$path.rewrite"
     deletePath(tmp)
     replacement.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).format(format).save(tmp)
+      .partitionBy(partitionCols: _*).parquet(tmp)
     val old = s"$path.old"
     deletePath(old)
     renamePath(path, old)
@@ -282,22 +281,26 @@ final class StateStore(
     * the same checkpoint is a no-op skip. */
   def writeCheckpoint(cp: Checkpoint): Unit = {
     val target = s"$checkpointsPath/cp-${cp.key}-${cp.height}.json"
-    if (!pathExists(target)) {
-      def q(s: String) = "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-      val json = s"""{"key":${q(cp.key)},"height":${cp.height},""" +
-        s""""block_id":${q(cp.blockId)},"block_num":${cp.blockNum}}\n"""
-      val staging = s"$stagingRoot/${java.util.UUID.randomUUID().toString}.json"
-      val (fs, sp) = fsPath(staging)
-      val out = fs.create(sp, true)
-      try out.write(json.getBytes("UTF-8")) finally out.close()
-      fs.mkdirs(new Path(checkpointsPath))
-      renamePath(staging, target)
-    }
+    if (!pathExists(target)) moveInCheckpointFile(Seq(cp), target)
     cpCache.put(cp.key, cp)
     maybeCompactCheckpoints()
+  }
+
+  /** Write `cps` as JSON lines to a staged file and move it to `target`
+    * with one single-file rename: a reader sees the whole file or none. */
+  private def moveInCheckpointFile(cps: Seq[Checkpoint], target: String): Unit = {
+    def q(s: String) = "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+    val json = cps.map(cp => s"""{"key":${q(cp.key)},"height":${cp.height},""" +
+      s""""block_id":${q(cp.blockId)},"block_num":${cp.blockNum}}\n""").mkString
+    val staging = s"$stagingRoot/${java.util.UUID.randomUUID().toString}.json"
+    val (fs, sp) = fsPath(staging)
+    val out = fs.create(sp, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+    fs.mkdirs(new Path(checkpointsPath))
+    renamePath(staging, target)
   }
 
   // Single-writer in-memory mirror of the latest checkpoint per key: the
@@ -320,15 +323,55 @@ final class StateStore(
         compactCheckpoints()
     }
 
-  /** Rewrite the checkpoint log to one row per key (its live value). */
-  def compactCheckpoints(): Unit = {
-    val latest = checkpointsDF
-      .groupBy(col("key"))
-      .agg(max_by(struct(col("height"), col("block_id"), col("block_num")), col("height")).as("w"))
-      .select(col("key"), col("w.height").as("height"),
-        col("w.block_id").as("block_id"), col("w.block_num").as("block_num"))
-      .coalesce(1)
-    rewriteTable(checkpointsPath, latest, format = "json")
+  /** Fold the checkpoint log in place to one row per key (its live value). */
+  def compactCheckpoints(): Unit = foldCheckpointLog(lit(true))
+
+  /** Test hook: runs inside [[foldCheckpointLog]] after the folded file
+    * is moved in and before the files it folded are deleted — the window
+    * a concurrent reader must see a complete log in. */
+  private[graft] var midCheckpointFoldHook: () => Unit = () => ()
+
+  /** Fold the checkpoint log IN PLACE to one row per key `keep` accepts
+    * (its live value): read every file listed now, write the per-key
+    * maximum as one new JSON file moved into `checkpoints/` with a
+    * single-file rename, then delete what was listed. A concurrent reader
+    * sees old ∪ folded (the same max per key) or the folded file alone —
+    * never an empty log — and a file deleted between its listing and its
+    * read is the FILE_NOT_EXIST case [[readCheckpointFromLog]] retries. A
+    * crash before the deletes leaves both, which the next fold absorbs.
+    * Legacy per-commit PARQUET directories (the pre-JSON layout) fold the
+    * same way. */
+  private def foldCheckpointLog(keep: Column): Unit = {
+    import spark.implicits._
+    val (fs, dir) = fsPath(checkpointsPath)
+    if (!fs.exists(dir)) return
+    // What gets deleted is listed BEFORE what gets read, so every deleted
+    // file was folded; a file landing between the listings is read and kept.
+    val listed = fs.listStatus(dir).toSeq
+    val files = Seq.newBuilder[Path]
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) files += it.next().getPath
+    val (parquet, json) = files.result()
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .map(_.toString).partition(_.endsWith(".parquet"))
+    val parts =
+      (if (json.isEmpty) Nil
+       else Seq(spark.read.schema(Schemas.checkpoints).json(json: _*))) ++
+      (if (parquet.isEmpty) Nil
+       else Seq(spark.read.schema(Schemas.checkpoints).parquet(parquet: _*)))
+    if (parts.nonEmpty) {
+      val latest = parts.reduce(_ unionByName _).filter(keep)
+        .groupBy(col("key"))
+        .agg(max_by(struct(col("height"), col("block_id"), col("block_num")),
+          col("height")).as("w"))
+        .select(col("key"), col("w.height").as("height"),
+          col("w.block_id").as("blockId"), col("w.block_num").as("blockNum"))
+        .as[Checkpoint].collect().toSeq
+      if (latest.nonEmpty) moveInCheckpointFile(latest,
+        s"$checkpointsPath/fold-${java.util.UUID.randomUUID().toString}.json")
+    }
+    midCheckpointFoldHook()
+    listed.foreach(st => fs.delete(st.getPath, true))
   }
 
   /** Atomically append pre-shaped mutation DataFrames. `commitId` names the
@@ -473,31 +516,16 @@ final class StateStore(
     * yields all-null rows, so `checkpoint()` would silently serve None over
     * a populated store — and the linearity guard would then re-admit
     * height-0 batches, duplicating data instead of failing loudly. Detect
-    * legacy parquet files once per instance and migrate them into the JSON
-    * log via the crash-safe table swap (single-writer makes this safe; a
+    * legacy parquet files once per instance and fold them into the JSON
+    * log in place ([[foldCheckpointLog]]; single-writer makes this safe; a
     * concurrent legacy READER of the same store was already impossible,
     * since it would be running pre-JSON code). */
   private lazy val migrateLegacyCheckpointLog: Unit = {
     val (fs, path) = fsPath(checkpointsPath)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
     val it = fs.listFiles(path, true)
-    while (it.hasNext) files += it.next().getPath
-    val parquetFiles = files.filter(_.getName.endsWith(".parquet"))
-    if (parquetFiles.nonEmpty) {
-      val legacy = spark.read.schema(Schemas.checkpoints)
-        .parquet(parquetFiles.map(_.toString).toSeq: _*)
-      val jsonFiles = files.filter(_.getName.endsWith(".json"))
-      val existing =
-        if (jsonFiles.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.checkpoints)
-        else spark.read.schema(Schemas.checkpoints)
-          .json(jsonFiles.map(_.toString).toSeq: _*)
-      // Materializes the union to a tmp table BEFORE the swap, so the
-      // explicit source file paths above are still live while read.
-      rewriteTable(
-        checkpointsPath, existing.unionByName(legacy).coalesce(1), format = "json")
-    }
+    var legacy = false
+    while (!legacy && it.hasNext) legacy = it.next().getPath.getName.endsWith(".parquet")
+    if (legacy) foldCheckpointLog(lit(true))
   }
 
   /** Latest checkpoint for a key (read.go:417–437). The checkpoint log is
@@ -1483,13 +1511,10 @@ final class StateStore(
     cp
   }
 
-  /** DeleteAllShardCheckpoints (write.go:196–198): compacting rewrite of the
-    * checkpoint log without the shard-* keys. */
+  /** DeleteAllShardCheckpoints (write.go:196–198): fold the checkpoint
+    * log in place without the shard-* keys. */
   def deleteAllShardCheckpoints(): Unit = {
-    rewriteTable(
-      checkpointsPath,
-      checkpointsDF.filter(!col("key").startsWith(ShardCheckpointPrefix)).coalesce(1),
-      format = "json")
+    foldCheckpointLog(!col("key").startsWith(ShardCheckpointPrefix))
     cpCache.keys.filter(_.startsWith(ShardCheckpointPrefix)).foreach(cpCache.remove)
   }
 }

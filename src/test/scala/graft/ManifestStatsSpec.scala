@@ -460,55 +460,124 @@ class ManifestStatsSpec extends SparkTestBase {
     }
   }
 
-  test("aqeScopeOff is depth-counted: overlapping scopes from concurrent " +
-    "threads restore the ORIGINAL value, never each other's 'false'") {
+  test("footer-folded bounds equal a Spark min/max over each file, " +
+    "including non-ASCII, NUL and U+FFFF keys; a >4 KiB key leaves its " +
+    "file unbounded on that column") {
+    implicit val s = spark
+    val path = tmpDir("mstats-footer")
+    val t = new ManifestTable(path, schema,
+      statsCols = Seq("tablet_id", "height", "primary_key"))
+    val rnd = new scala.util.Random(7)
+    val alphabet = Seq("a", "z", "é", "中", "\u0000", "\uFFFF", "\uD83D\uDE00", "~")
+    def key(): String = Seq.fill(1 + rnd.nextInt(4))(
+      alphabet(rnd.nextInt(alphabet.size))).mkString
+    (0 until 4).foreach { c =>
+      t.commit(df(Seq.fill(40)((key(), rnd.nextInt(1000).toLong - 500L, key())): _*)
+        .repartition(3), s"c$c")
+    }
+    val huge = "h" * 5000
+    t.commit(df(("t9", 1L, huge), ("t9", 2L, "small")).coalesce(1), "c-huge")
+    val entries = t.manifestEntriesFull(t.currentGeneration().get)
+    val files = entries.flatMap(e => e.files.zip(e.stats))
+    assert(files.size >= 5)
+    def bytes(v: ManifestTable.StatVal): Seq[Byte] = v match {
+      case ManifestTable.BytesVal(b) => b.toSeq
+      case other => fail(s"expected a string bound, got $other")
+    }
+    for ((rel, bounds) <- files) {
+      val ref = spark.read.schema(schema).parquet(s"$path/$rel")
+        .agg(min("tablet_id"), max("tablet_id"), min("height"), max("height"),
+          min("primary_key"), max("primary_key"))
+        .head()
+      val utf8 = (i: Int) => ref.getString(i).getBytes("UTF-8").toSeq
+      assert(bounds.get("tablet_id").map { case (lo, hi) => (bytes(lo), bytes(hi)) } ===
+        Some((utf8(0), utf8(1))), rel)
+      assert(bounds.get("height") === Some(
+        (ManifestTable.LongVal(ref.getLong(2)), ManifestTable.LongVal(ref.getLong(3)))), rel)
+      if (Seq(ref.getString(4), ref.getString(5)).contains(huge))
+        assert(!bounds.contains("primary_key"),
+          s"$rel: the footer holds no bounds for a >4 KiB value")
+      else
+        assert(bounds.get("primary_key").map { case (lo, hi) => (bytes(lo), bytes(hi)) } ===
+          Some((utf8(4), utf8(5))), rel)
+    }
+    // The unbounded file is never pruned on that column.
+    assert(rowSet(t.readPruned(Seq(StatsEq("primary_key", huge)))
+      .filter(col("primary_key") === huge)) === Set(("t9", 1L, huge)))
+  }
+
+  test("a merge never reconfigures the caller's session: a UDF in the " +
+    "update batch sees the caller's AQE setting throughout") {
+    implicit val s = spark
+    import s.implicits._
     val key = "spark.sql.adaptive.enabled"
     val original = spark.conf.get(key, "true")
     spark.conf.set(key, "true")
     try {
-      // Nested (same thread): inner exit must NOT restore yet.
-      ManifestTable.aqeScopeOff(spark) {
-        assert(spark.conf.get(key) === "false")
-        ManifestTable.aqeScopeOff(spark) {
-          assert(spark.conf.get(key) === "false")
-        }
-        assert(spark.conf.get(key) === "false",
-          "inner scope exit must not restore while the outer is active")
+      CallerSessionProbe.session = spark
+      CallerSessionProbe.seen.clear()
+      val probe = udf { (k: String) =>
+        CallerSessionProbe.seen.add(
+          CallerSessionProbe.session.conf.get("spark.sql.adaptive.enabled"))
+        k
       }
+      val mschema = StructType(Seq(
+        StructField("k", StringType), StructField("height", LongType),
+        StructField("del", org.apache.spark.sql.types.BooleanType),
+        StructField("v", StringType)))
+      val t = new ManifestTable(tmpDir("mstats-caller"), mschema, statsCols = Seq("k"))
+      def upd(rows: (String, Long, Boolean, String)*): DataFrame =
+        rows.toDF("k", "height", "del", "v").withColumn("k", probe(col("k")))
+      // Append-only merge (no existing file), then a rewrite merge that
+      // both updates a key and inserts a fresh one.
+      t.merge(upd(("a", 1L, false, "a1"), ("b", 1L, false, "b1")),
+        Seq("k"), "height", "del", "m1")
+      t.merge(upd(("a", 2L, false, "a2"), ("c", 2L, false, "c2")),
+        Seq("k"), "height", "del", "m2")
+      assert(t.read().collect().map(r => r.getAs[String]("k") -> r.getAs[String]("v"))
+        .toMap === Map("a" -> "a2", "b" -> "b1", "c" -> "c2"))
+      import scala.jdk.CollectionConverters._
+      val seen = CallerSessionProbe.seen.asScala.toSet
+      assert(seen === Set("true"), "the UDF observed the caller's AQE flag flipped")
       assert(spark.conf.get(key) === "true")
-      // Overlapping (two threads): the naive set/restore pair would let
-      // the second thread capture "false" as the previous value and pin
-      // the session; the depth counter must restore "true" at the end.
-      val enteredA = new java.util.concurrent.CountDownLatch(1)
-      val enteredB = new java.util.concurrent.CountDownLatch(1)
-      val exitA = new java.util.concurrent.CountDownLatch(1)
-      val a = new Thread(() => ManifestTable.aqeScopeOff(spark) {
-        enteredA.countDown()
-        enteredB.await(10, java.util.concurrent.TimeUnit.SECONDS)
-        exitA.await(10, java.util.concurrent.TimeUnit.SECONDS)
-      })
-      val b = new Thread(() => ManifestTable.aqeScopeOff(spark) {
-        enteredB.countDown()
-        // B exits FIRST while A is still inside.
-      })
-      a.start()
-      enteredA.await(10, java.util.concurrent.TimeUnit.SECONDS)
-      b.start(); b.join(10000)
-      assert(spark.conf.get(key) === "false",
-        "A still inside: the scope must stay off after B's exit")
-      exitA.countDown(); a.join(10000)
-      assert(spark.conf.get(key) === "true",
-        "the outermost exit restores the value captured BEFORE any scope")
-      // Leak pin: the per-session entry dies with its last scope — the map
-      // must not strongly retain the session for the JVM lifetime.
-      assert(ManifestTable.aqeScopeCount === 0,
-        "scope-state entries must be removed when the depth returns to 0")
-      // And a fresh scope after the removal still round-trips correctly.
-      ManifestTable.aqeScopeOff(spark) {
-        assert(spark.conf.get(key) === "false")
-      }
-      assert(spark.conf.get(key) === "true")
-      assert(ManifestTable.aqeScopeCount === 0)
-    } finally spark.conf.set(key, original)
+    } finally {
+      spark.conf.set(key, original)
+      CallerSessionProbe.session = null
+    }
   }
+
+  test("a pointer read whose .crc is stale retries like a torn read: " +
+    "repaired in the window it returns the right generation, left stale it " +
+    "fails loudly") {
+    implicit val s = spark
+    val path = tmpDir("mstats-crc")
+    val t = new ManifestTable(path, schema)
+    val crc = java.nio.file.Paths.get(path, "._gen.crc")
+    t.commit(df(("t1", 1L, "a")), "c1")
+    val staleCrc = java.nio.file.Files.readAllBytes(crc)
+    t.commit(df(("t1", 2L, "b")), "c2")
+    val liveCrc = java.nio.file.Files.readAllBytes(crc)
+    assert(!java.util.Arrays.equals(staleCrc, liveCrc))
+    // The window a poll hits when the pointer is renamed before its .crc.
+    java.nio.file.Files.write(crc, staleCrc)
+    val reader = new ManifestTable(path, schema)
+    val repair = new Thread(() => {
+      Thread.sleep(10)
+      java.nio.file.Files.write(crc, liveCrc)
+    })
+    repair.start()
+    try assert(reader.currentGeneration() === Some(2L))
+    finally repair.join(10000)
+    java.nio.file.Files.write(crc, staleCrc)
+    intercept[org.apache.hadoop.fs.ChecksumException] {
+      reader.currentGeneration()
+    }
+  }
+}
+
+/** JVM-static handle for a UDF to read the CALLER's session config from
+  * inside a task (local mode runs tasks in the driver JVM). */
+object CallerSessionProbe {
+  @volatile var session: org.apache.spark.sql.SparkSession = _
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

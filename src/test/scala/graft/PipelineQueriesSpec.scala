@@ -564,6 +564,25 @@ class PipelineQueriesSpec extends SparkTestBase {
     assert(!P.shingleIndexBroadcastable(s2, sf))
   }
 
+  test("parquetRowCount re-reads a file rewritten in place instead of " +
+    "serving the memoized count") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("rowcount")
+    val file = dir.resolve("t.parquet")
+    def writeRows(n: Int): Unit = {
+      val stage = dir.resolve(s"stage-$n")
+      (1 to n).toDF("x").coalesce(1).write.parquet(stage.toString)
+      val part = stage.toFile.listFiles().find(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeRows(5)
+    assert(graft.queries.PipelineQueries.parquetRowCount(spark, file.toString) === 5L)
+    writeRows(12)
+    assert(graft.queries.PipelineQueries.parquetRowCount(spark, file.toString) === 12L)
+  }
+
   test("minhash-LSH candidates verified by exact Jaccard are a subset of the " +
     "full inverted-index pairs") {
     val exact = run("p_dedup_ngram_jaccard").collect()

@@ -232,6 +232,31 @@ class StateStoreSpec extends SparkTestBase {
     assert(reopened.checkpoint("shard-000").get.height === 7L)
   }
 
+  test("checkpoint-log folds never show a concurrent reader an empty log: " +
+    "a reader inside the fold window sees every key's live checkpoint") {
+    implicit val s = spark
+    val root = tmpDir("store")
+    val store = new StateStore(root)
+    (0L to 4L).foreach(h => store.writeBatch(Seq(req(h, ("t1", "k", s"v$h")))))
+    store.writeCheckpoint(Checkpoint("shard-000", 3L, "s3", 3L))
+    // A reader-fleet instance, built before the writer folds.
+    val reader = new StateStore(root)
+    val inWindow = scala.collection.mutable.ArrayBuffer.empty[(Option[Long], Option[Long])]
+    store.midCheckpointFoldHook = () => inWindow += ((
+      reader.checkpointFresh(StateStore.GlobalCheckpointKey).map(_.height),
+      reader.checkpointFresh("shard-000").map(_.height)))
+    store.compactCheckpoints()
+    store.deleteAllShardCheckpoints()
+    assert(inWindow.size === 2)
+    assert(inWindow(0) === ((Some(4L), Some(3L))), "compactCheckpoints window")
+    assert(inWindow(1)._1 === Some(4L), "deleteAllShardCheckpoints window")
+    // After the folds: one file, shard keys gone, the live head intact.
+    val p = new org.apache.hadoop.fs.Path(store.checkpointsPath)
+    assert(p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p).length === 1)
+    assert(reader.checkpointFresh(StateStore.GlobalCheckpointKey).map(_.height) === Some(4L))
+    assert(reader.checkpointFresh("shard-000") === None)
+  }
+
   test("legacy parquet checkpoint log is detected and migrated, not " +
     "silently parsed as null JSON") {
     implicit val s = spark
