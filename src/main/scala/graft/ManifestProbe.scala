@@ -13,12 +13,11 @@ import org.apache.spark.sql.functions._
   * same reads over the unpruned full-table scan.
   *
   * What the two routes pay before a single row is read:
-  *   - unpruned: the scan is a union of one FileSourceScan per live commit
-  *     directory (the partition-parsing basePath constraint), so planning
+  *   - unpruned: one FileSourceScan over every live file, so planning
   *     lists and footer-reads EVERY live file — the cost that grows
   *     per-commit until compaction;
   *   - pruned: the file list comes from manifest metadata (one small JSON
-  *     read), and only surviving directories enter the union.
+  *     read), and only surviving files enter the scan.
   *
   * On tmpfs the I/O is page-cached, so alongside min-of-N wall time the
   * probe prints the file counts the manifest arithmetic kept — the number
@@ -182,7 +181,7 @@ object ManifestProbe {
 
     val queries: Seq[(String, () => DataFrame)] = Seq(
       // The flagship read at mid height: pruned route (the store's own
-      // path) vs the same computation over the unpruned union.
+      // path) vs the same computation over the unpruned full scan.
       "read_mid_pruned" -> (() => store.readTabletAt("tab3", midH)),
       "read_mid_unpruned" -> (() =>
         graft.read.TemporalReads.readTabletAt(store.tabletRows, "tab3", midH)),
@@ -223,7 +222,7 @@ object ManifestProbe {
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         // Timing includes DataFrame CONSTRUCTION: resolving the manifest
-        // and building the union is part of read latency, and planning
+        // and listing its files is part of read latency, and planning
         // width is precisely what pruning attacks.
         mk().selectExpr("count(*)", "bit_xor(xxhash64(struct(*)))").collect()
         samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9

@@ -117,7 +117,6 @@ import org.apache.spark.sql.graftbridge.GraftBridge
   * provides (store/kv/store.go:332–467).
   */
 final class ManifestTable(val tablePath: String, schema: StructType,
-    partitionCol: Option[String] = None,
     statsCols: Seq[String] = Nil,
     val checkpointInterval: Int = 1)(
     implicit spark: SparkSession) {
@@ -128,9 +127,6 @@ final class ManifestTable(val tablePath: String, schema: StructType,
   require(checkpointInterval >= 1,
     s"checkpointInterval must be >= 1, got $checkpointInterval")
   statsCols.foreach { c =>
-    require(partitionCol.forall(_ != c),
-      s"stats column $c is the partition column — its value lives in the " +
-        "directory name, not the file; partition pruning already serves it")
     val f = schema.fields.find(_.name == c).getOrElse(
       sys.error(s"stats column $c not in schema"))
     require(
@@ -1603,12 +1599,10 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     }.sortBy(_._1)
   }
 
-  /** Write one commit's data files under `dir`, hive-partitioned by
-    * `partitionCol` when set (so downstream reads prune on it). */
-  private def writeData(df: DataFrame, dir: String): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    partitionCol.fold(w)(c => w.partitionBy(c)).parquet(dir)
-  }
+  /** Write one commit's data files flat under `dir`: every column,
+    * `collection` included, is an ordinary data column. */
+  private def writeData(df: DataFrame, dir: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
 
   // --------------------------------------------------------------- commit
 
@@ -2052,18 +2046,15 @@ final class ManifestTable(val tablePath: String, schema: StructType,
 
   /** The table as of the current generation — only manifested files.
     *
-    * With `partitionCol` set the data files carry the column only in their
-    * `col=value/` directory names. Spark's partition parsing requires the
-    * `col=value` segments to sit DIRECTLY under `basePath` (a non-partition
-    * commit dir in between raises CONFLICTING_DIRECTORY_STRUCTURES), so
-    * each commit directory is scanned with itself as the base and the
-    * scans unioned: every branch still gets PartitionFilters, so a
-    * predicate on `partitionCol` prunes whole directories exactly like the
-    * rename-protocol layout. The union's width is the live commit count,
-    * which [[replaceAll]] (compaction) periodically collapses to one —
-    * same steady state as Iceberg/Delta manifest compaction. Partition
-    * parsing moves the column to the end of the schema — re-select
-    * restores the declared order. */
+    * Data files sit flat under their commit directory
+    * (`d-<commit>/part-*.parquet`) and carry every schema column, so a
+    * generation of any commit count reads as ONE parquet scan over its
+    * file list. Partition values live in the data, not in the paths (the
+    * Delta/Iceberg shape): a predicate on a column the writer sorted by
+    * first (`collection` for the store's mutation tables) skips row
+    * groups through parquet pushdown instead of pruning directories.
+    * Files written before this layout keep their hive paths until the
+    * next [[replaceAll]] rewrites them flat (see [[scanOf]]). */
   def read(): DataFrame =
     currentGeneration().map(readAt).getOrElse(emptyDf)
 
@@ -2096,26 +2087,30 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     scanOf(manifestEntries(gen).flatMap(_._2))
   }
 
-  /** Build the union scan over an explicit relative-file list (the commit
-    * structure readAt documents: per-commit basePath so partition parsing
-    * sees `col=value` directly under each base). `private[graft]` so the
-    * changefeed source can scan exactly one commit's files. */
+  /** One parquet scan over an explicit relative-file list, in the
+    * declared column order. `private[graft]` so the changefeed source can
+    * scan exactly one commit's files. Old-layout files (under a hive
+    * `<col>=<value>/` directory) lack `<col>`, which a flat scan reads as
+    * NULL; when the list names such a directory, the same scan fills the
+    * column from each file's path. */
   private[graft] def scanOf(rel: Seq[String]): DataFrame =
     if (rel.isEmpty) emptyDf
-    else partitionCol match {
-      case None =>
-        spark.read.schema(schema).parquet(rel.map(f => s"$tablePath/$f"): _*)
-      case Some(_) =>
-        rel.groupBy(_.split("/", 2)(0)).toSeq.sortBy(_._1)
-          .map { case (commitDir, files) =>
-            spark.read
-              .option("basePath", s"$tablePath/$commitDir")
-              .schema(schema)
-              .parquet(files.map(f => s"$tablePath/$f"): _*)
-              .select(schema.fieldNames.map(
-                org.apache.spark.sql.functions.col).toSeq: _*)
-          }
-          .reduce(_ unionByName _)
+    else {
+      import org.apache.spark.sql.functions.{coalesce, col, regexp_extract}
+      val scan = spark.read.schema(schema).parquet(rel.map(f => s"$tablePath/$f"): _*)
+      val inPath = rel.iterator.flatMap(_.split('/').init)
+        .collect { case d if d.contains('=') => d.takeWhile(_ != '=') }.toSet
+      val legacy = schema.fields.filter(f => inPath(f.name))
+      if (legacy.isEmpty) scan
+      else {
+        val filePath = col("_metadata").getField("file_path")
+        scan.select(schema.fields.map { f =>
+          if (!legacy.contains(f)) col(f.name)
+          else coalesce(col(f.name), regexp_extract(filePath,
+            s"/${java.util.regex.Pattern.quote(f.name)}=([^/]+)/", 1)
+            .cast(f.dataType)).as(f.name)
+        }.toSeq: _*)
+      }
     }
 
   /** DATA-SKIPPING read: the current generation restricted to files whose
@@ -2585,6 +2580,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     // orderCol go to the updates side; winning tombstones drop the key.
     val cols = schema.fieldNames.toSeq
     val existing = scanOf(matchedFiles).withColumn("__src", lit(0))
+    // Same column order as `existing` (scanOf keeps the declared order).
     val upd = updates.select(cols.map(col): _*).withColumn("__src", lit(1))
     // RANGE-partitioned on the keys, one output file per rewritten file:
     // a hash-partitioned (or AQE-coalesced) rewrite would give every
@@ -2593,7 +2589,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
     // after one pass. Range + sort keeps per-file bounds as tight as the
     // files being replaced (probe-verified: stable rewritten-file count
     // across repeated point merges).
-    val winners = existing.unionByName(upd)
+    val winners = existing.union(upd)
       .groupBy(keyCols.map(col): _*)
       // `__had` = the key existed in a matched file: what separates a
       // REWRITTEN row (old key, old-or-updated value) from a genuinely
@@ -2656,8 +2652,7 @@ final class ManifestTable(val tablePath: String, schema: StructType,
             val freshDf = onMeta(freshSide
               .repartitionByRange(parts.toInt, keyCols.map(col): _*)
               .sortWithinPartitions(keyCols.map(col): _*))
-            val w = freshDf.write.mode(SaveMode.Append)
-            partitionCol.fold(w)(c => w.partitionBy(c)).parquet(dataDir)
+            freshDf.write.mode(SaveMode.Append).parquet(dataDir)
           }
           (rw, listDataFilesSized(dataDir))
         } finally m.unpersist(blocking = false)

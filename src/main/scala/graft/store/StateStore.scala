@@ -9,12 +9,15 @@ import graft.model._
 /** Durable storage layout + batch writer (reference write.go, store/kv).
   *
   * Layout (SURVEY.md §1.4): append-only Parquet tables under a root —
-  *   tablet_rows/      hive-partitioned by `collection=N`, one COMMITTED
-  *                     sub-directory per batch below the partition dir,
-  *                     sorted within files by (tablet_id, height). A
-  *                     collection predicate prunes whole directories
-  *                     (PartitionFilters); tablet/height predicates prune
-  *                     via min/max row-group stats.
+  *   tablet_rows/      sorted within files by (collection, tablet_id,
+  *                     height). Rename protocol: hive-partitioned by
+  *                     `collection=N`, one COMMITTED sub-directory per batch
+  *                     below the partition dir; a collection predicate
+  *                     prunes whole directories (PartitionFilters). Manifest
+  *                     protocol: flat files per commit with `collection` a
+  *                     data column; the predicate skips row groups instead.
+  *                     Tablet/height predicates prune via min/max row-group
+  *                     stats.
   *   singlet_entries/  same.
   *   checkpoints/      tiny commit log; the LAST durably-visible write of a
   *                     batch, mirroring the reference's checkpoint-key-last
@@ -379,9 +382,9 @@ final class StateStore(
     * number) to make crash-replays skip instead of duplicate; the default
     * random id gives plain append semantics. Returns false if that commit
     * already exists. */
-  // Manifest-protocol table handles (unused under RenameCommit). Same
-  // collection=N hive layout as the rename protocol, nested per commit dir,
-  // so collection predicates prune directories under BOTH protocols.
+  // Manifest-protocol table handles (unused under RenameCommit). Flat
+  // commit dirs, `collection` stored as a data column: a generation reads
+  // as one scan, and collection predicates skip row groups by pushdown.
   // statsCols: the manifest records per-file (tablet/singlet id, height,
   // key) bounds at commit, and the point/as-of read paths prune the FILE
   // LIST driver-side before Spark lists or footer-reads anything
@@ -389,11 +392,11 @@ final class StateStore(
   // commit count is what a read pays for first, and manifest stats cut it
   // without waiting for compaction.
   private lazy val manifestTabletRows =
-    new ManifestTable(tabletRowsPath, Schemas.tabletRows, Some("collection"),
+    new ManifestTable(tabletRowsPath, Schemas.tabletRows,
       statsCols = Seq("tablet_id", "height", "primary_key"),
       checkpointInterval = manifestCheckpointInterval)
   private lazy val manifestSingletEntries =
-    new ManifestTable(singletEntriesPath, Schemas.singletEntries, Some("collection"),
+    new ManifestTable(singletEntriesPath, Schemas.singletEntries,
       statsCols = Seq("singlet_id", "height"),
       checkpointInterval = manifestCheckpointInterval)
 
@@ -451,9 +454,10 @@ final class StateStore(
   def writeTabletRows(
       df: DataFrame,
       commitId: String = java.util.UUID.randomUUID().toString): Boolean = {
-    // Leading `collection` in the sort satisfies the partitioned writer's
-    // required ordering (no second sort) and keeps each output file
-    // sorted by (tablet_id, height) for row-group pruning.
+    // Leading `collection`: RenameCommit's partitioned writer needs it (no
+    // second sort); under ManifestCommit it clusters row groups so a
+    // collection predicate skips them. Files stay sorted by (tablet_id,
+    // height) for row-group pruning.
     val sorted = df.sortWithinPartitions("collection", "tablet_id", "height")
     commitProtocol match {
       case ManifestCommit => manifestTabletRows.commit(sorted, commitId)

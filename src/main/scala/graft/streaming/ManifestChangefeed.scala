@@ -78,14 +78,14 @@ object ManifestChangefeed {
 
   /** The two store mutation tables this source understands out of the box
     * (`table` option); any other manifest table streams by passing an
-    * explicit schema + `partitionCol` option instead. */
-  private[streaming] def tableDefaults(table: String): (StructType, Option[String]) =
+    * explicit schema instead. */
+  private[streaming] def tableDefaults(table: String): StructType =
     table match {
-      case "tablet_rows"     => (Schemas.tabletRows, Some("collection"))
-      case "singlet_entries" => (Schemas.singletEntries, Some("collection"))
+      case "tablet_rows"     => Schemas.tabletRows
+      case "singlet_entries" => Schemas.singletEntries
       case other => sys.error(
         s"unknown table '$other': pass an explicit readStream schema " +
-          "(plus partitionCol option) for non-store manifest tables")
+          "for non-store manifest tables")
     }
 
   /** Stream a manifest table's committed rows. `startingGeneration`:
@@ -310,7 +310,6 @@ final class ManifestChangefeedSource(
     sqlContext: SQLContext,
     tablePath: String,
     dataSchema: StructType,
-    partitionCol: Option[String],
     baseGen: Long,
     onRewrite: String,
     maxGenerationsPerTrigger: Option[Long] = None,
@@ -330,7 +329,7 @@ final class ManifestChangefeedSource(
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private implicit val spark: SparkSession = sqlContext.sparkSession
-  private val table = new ManifestTable(tablePath, dataSchema, partitionCol)
+  private val table = new ManifestTable(tablePath, dataSchema)
 
   override val schema: StructType = ManifestChangefeed.withProvenance(dataSchema)
 
@@ -657,8 +656,8 @@ final class ManifestChangefeedSource(
 
 /** `spark.readStream.format("graft-changefeed")` registration. Options:
   * `path` (required, the manifest table path), `table`
-  * (tablet_rows | singlet_entries — picks schema + partition column; or
-  * pass an explicit schema and `partitionCol`), `startingGeneration`
+  * (tablet_rows | singlet_entries — picks the schema; or pass an
+  * explicit schema), `startingGeneration`
   * (number | "latest"), `onRewrite` (skip | fail | emitFresh),
   * `maxGenerationsPerTrigger` (positive long — caps how many pending
   * generations one micro-batch may span; catch-up splits into bounded,
@@ -678,20 +677,16 @@ final class ManifestChangefeedProvider extends StreamSourceProvider with DataSou
 
   private def resolve(
       schemaOpt: Option[StructType],
-      parameters: Map[String, String]): (StructType, Option[String]) =
-    schemaOpt match {
-      case Some(s) => (s, parameters.get("partitionCol"))
-      case None =>
-        ManifestChangefeed.tableDefaults(
-          parameters.getOrElse("table", "tablet_rows"))
-    }
+      parameters: Map[String, String]): StructType =
+    schemaOpt.getOrElse(ManifestChangefeed.tableDefaults(
+      parameters.getOrElse("table", "tablet_rows")))
 
   override def sourceSchema(
       sqlContext: SQLContext,
       schema: Option[StructType],
       providerName: String,
       parameters: Map[String, String]): (String, StructType) =
-    (shortName(), ManifestChangefeed.withProvenance(resolve(schema, parameters)._1))
+    (shortName(), ManifestChangefeed.withProvenance(resolve(schema, parameters)))
 
   override def createSource(
       sqlContext: SQLContext,
@@ -701,7 +696,7 @@ final class ManifestChangefeedProvider extends StreamSourceProvider with DataSou
       parameters: Map[String, String]): Source = {
     val path = parameters.getOrElse("path",
       sys.error("graft-changefeed requires a 'path' option (the manifest table path)"))
-    val (dataSchema, partitionCol) = resolve(schema, parameters)
+    val dataSchema = resolve(schema, parameters)
     implicit val spark: SparkSession = sqlContext.sparkSession
     val baseGen = parameters.getOrElse("startingGeneration", "0") match {
       // "latest" binds ONCE per checkpoint, persisted under the source's
@@ -712,8 +707,7 @@ final class ManifestChangefeedProvider extends StreamSourceProvider with DataSou
       // the generations published in between.
       case "latest" =>
         ManifestChangefeedProvider.persistedBaseGen(spark, metadataPath, () =>
-          new ManifestTable(path, dataSchema, partitionCol)
-            .currentGeneration().getOrElse(0L))
+          new ManifestTable(path, dataSchema).currentGeneration().getOrElse(0L))
       case n => n.toLong
     }
     // `maxFilesPerTrigger=none` is the EXPLICIT all-available opt-out
@@ -721,8 +715,8 @@ final class ManifestChangefeedProvider extends StreamSourceProvider with DataSou
     // default file budget — see defaultMaxFilesPerTrigger).
     val rawMaxFiles = parameters.get("maxFilesPerTrigger").map(_.trim)
     val uncapped = rawMaxFiles.exists(_.equalsIgnoreCase("none"))
-    new ManifestChangefeedSource(sqlContext, path, dataSchema, partitionCol,
-      baseGen, parameters.getOrElse("onRewrite", "skip"),
+    new ManifestChangefeedSource(sqlContext, path, dataSchema, baseGen,
+      parameters.getOrElse("onRewrite", "skip"),
       parameters.get("maxGenerationsPerTrigger").map(_.trim.toLong),
       rawMaxFiles.filterNot(_.equalsIgnoreCase("none")).map(_.toLong),
       parameters.get("maxBytesPerTrigger").map(_.trim.toLong),

@@ -41,11 +41,11 @@ object StateMaterializer {
 
   val KeyCols: Seq[String] = Seq("tablet_id", "primary_key")
 
-  /** The target's manifest table handle: same schema/partitioning as the
+  /** The target's manifest table handle: same schema and layout as the
     * mutation table, stats on the MERGE KEYS so both merge file-matching
     * and point-read pruning work from the manifest alone. */
   def targetTable(targetPath: String)(implicit spark: SparkSession): ManifestTable =
-    new ManifestTable(targetPath, Schemas.tabletRows, Some("collection"),
+    new ManifestTable(targetPath, Schemas.tabletRows,
       statsCols = Seq("tablet_id", "primary_key"))
 
   /** Start maintaining `targetPath` from `store`'s changefeed. The

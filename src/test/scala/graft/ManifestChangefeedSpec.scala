@@ -301,7 +301,7 @@ class ManifestChangefeedSpec extends SparkTestBase {
 
     def mkSource() = new graft.streaming.ManifestChangefeedSource(
       spark.sqlContext, store.tabletRowsPath, graft.model.Schemas.tabletRows,
-      Some("collection"), baseGen = 0L, onRewrite = "skip",
+      baseGen = 0L, onRewrite = "skip",
       maxGenerationsPerTrigger = Some(2L))
     def gensOf(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       // getBatch results are streaming-tagged (the V1 contract) — re-flag
@@ -445,7 +445,7 @@ class ManifestChangefeedSpec extends SparkTestBase {
     (1 to 3).foreach(h => store.writeBatch(Seq(req(h, ("t1", s"k$h", s"v$h")))))
     val src = new graft.streaming.ManifestChangefeedSource(
       spark.sqlContext, store.tabletRowsPath, graft.model.Schemas.tabletRows,
-      Some("collection"), baseGen = 0L, onRewrite = "skip",
+      baseGen = 0L, onRewrite = "skip",
       maxGenerationsPerTrigger = Some(2L))
     val limit = src.getDefaultReadLimit
     src.prepareForTriggerAvailableNow() // pin = generation 3
@@ -489,7 +489,7 @@ class ManifestChangefeedSpec extends SparkTestBase {
     def mkSource(files: Option[Long], bytes: Option[Long]) =
       new graft.streaming.ManifestChangefeedSource(
         spark.sqlContext, store.tabletRowsPath, graft.model.Schemas.tabletRows,
-        Some("collection"), baseGen = 0L, onRewrite = "skip",
+        baseGen = 0L, onRewrite = "skip",
         maxFilesPerTrigger = files, maxBytesPerTrigger = bytes)
     def slicesOf(src: graft.streaming.ManifestChangefeedSource): Seq[(Long, Long)] = {
       val limit = src.getDefaultReadLimit
@@ -603,7 +603,7 @@ class ManifestChangefeedSpec extends SparkTestBase {
     assert(t.deltaRecord(3L).get.fresh === Some(Seq.empty))
 
     def mkSource(mode: String) = new graft.streaming.ManifestChangefeedSource(
-      spark.sqlContext, dir, mergeSchema, None,
+      spark.sqlContext, dir, mergeSchema,
       baseGen = 0L, onRewrite = mode)
     def drain(mode: String): Seq[(String, Long, Long)] = {
       val df = mkSource(mode)
@@ -822,7 +822,7 @@ class ManifestChangefeedSpec extends SparkTestBase {
     def mkSource(files: Option[Long] = None, uncapped: Boolean = false) =
       new graft.streaming.ManifestChangefeedSource(
         spark.sqlContext, store.tabletRowsPath, graft.model.Schemas.tabletRows,
-        Some("collection"), baseGen = 0L, onRewrite = "skip",
+        baseGen = 0L, onRewrite = "skip",
         maxFilesPerTrigger = files, uncappedExplicit = uncapped)
     val mt = store.manifestTableFor(store.tabletRowsPath)
     val filesPerGen = mt.deltaRecord(1L).get.entry.files.size.toLong
@@ -891,7 +891,7 @@ class ManifestChangefeedSpec extends SparkTestBase {
     val budget = genBytes(1) + genBytes(2) + 64L
     val src = new graft.streaming.ManifestChangefeedSource(
       spark.sqlContext, store.tabletRowsPath, graft.model.Schemas.tabletRows,
-      Some("collection"), baseGen = 0L, onRewrite = "skip",
+      baseGen = 0L, onRewrite = "skip",
       maxBytesPerTrigger = Some(budget))
     val slices = slicesOf(src)
     assert(slices.head === 2L,
